@@ -271,14 +271,13 @@ object SparkEntry {
     // own + probed inverted lists of the sharded K∝n SemDeDup centroids
     // (~320 cosines per vector at any scale), same bounded aggregate
     "knn_graph_ivf" -> (Similarity.knnGraphIvf _),
-    // FULL-CORPUS connected components over the ivf kNN edges — hash-to-
-    // min with pointer jumping, linear per-round equi-joins; the graph
-    // family's first whole-corpus face (the 200-node slice contract
-    // covers the rest)
+    // FULL-CORPUS connected components over the ivf kNN edges — the
+    // O(log n) star-contraction engine; the graph family's first
+    // whole-corpus face (the 200-node slice contract covers the rest)
     "knn_components" -> (Similarity.knnComponents _),
     // full-corpus label-prop communities over the same ivf edges — the
     // finer structure connectivity collapses (one giant component);
-    // election = two partial-combinable aggs, no packing bound
+    // election = one max(struct(count, -label)), no packing bound
     "knn_labelprop" -> (Similarity.knnLabelprop _),
     // single-pass distributed second moments (partial-combined to d²/2
     // cells before the exchange); exact via the dec-staged sums
@@ -378,9 +377,10 @@ object SparkEntry {
     "graph_clustering" -> (graft.operators.GraphRank.graphClustering _),
     "graph_kcore" -> (graft.operators.GraphRank.graphKcore _),
     // deterministic synchronous label-propagation communities: per round
-    // one equi-join + partial-combinable (count, min-label) vote packing
+    // one equi-join + partial-combinable (max count, min label) election
     "graph_labelprop" -> (graft.operators.GraphRank.graphLabelprop _),
-    "dedup_clusters_star" -> (Dedup.dedupClustersStar _),
+    // same engine as dedup_clusters (the name is kept for its consumers)
+    "dedup_clusters_star" -> (Dedup.dedupClusters _),
     "dedup_clusters_star_dist" -> (Dedup.dedupClustersStarDistributed _),
     "decontaminate" -> (Dedup.decontaminate _),
     // the EVAL-side audit: per-eval-doc leaked grams / leak fraction /
@@ -607,8 +607,8 @@ object SparkEntry {
     "bucketed_join" -> graft.operators.ScaleLayout.bucketedJoinSql,
     "zorder_layout" -> graft.operators.ScaleLayout.zorderLayoutSql,
     // connected components over the near-dup pair graph; oracle walks the
-    // same graph with a recursive CTE — equality proves the distributed
-    // min-label-propagation loop computes exactly the transitive closure
+    // same graph with a recursive CTE — equality proves the star
+    // contraction computes exactly the transitive closure
     "dedup_clusters" -> Dedup.dedupClustersSql,
     "pagerank_sim" -> graft.operators.GraphRank.pagerankSimSql,
     "graph_bfs" -> graft.operators.GraphRank.graphBfsSql,
@@ -616,9 +616,6 @@ object SparkEntry {
     "graph_clustering" -> graft.operators.GraphRank.graphClusteringSql,
     "graph_kcore" -> graft.operators.GraphRank.graphKcoreSql,
     "graph_labelprop" -> graft.operators.GraphRank.graphLabelpropSql,
-    // the O(log n) star-contraction engine against the SAME oracle:
-    // equality proves the alternating contraction computes exactly the
-    // transitive closure the propagation loop does
     "dedup_clusters_star" -> Dedup.dedupClustersSql,
     // the distributed-rounds twin shares the oracle: ADVICE r5 — the
     // star-contraction loop itself stays under the DuckDB equality gate

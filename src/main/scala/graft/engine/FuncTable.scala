@@ -202,10 +202,16 @@ object BuiltinFuncs {
     * to run. Now the output is the sorted key list regardless of combine
     * order or grouping — determinism spec-pinned in EngineMapReduceSpec.)
     * Map outputs are single lines (trivially sorted), so every combine
-    * input is sorted by induction. */
+    * input is sorted by induction. `reduce` (one call per partition in
+    * the tree tier) sorts its inputs once instead of folding pairwise
+    * merges — the fold re-splits the growing accumulator on every
+    * combine, quadratic in the partition's key count. */
   object AllKeysAssoc extends AssociativeMapReduceFn {
     def map(key: String, value: Array[Byte]): Array[Byte] = key.getBytes("UTF-8")
     def zero: Array[Byte] = Array.emptyByteArray
+    override def reduce(all: Seq[Array[Byte]]): Array[Byte] =
+      all.filter(_.nonEmpty).map(new String(_, "UTF-8")).sorted
+        .mkString("\n").getBytes("UTF-8")
     def combine(a: Array[Byte], b: Array[Byte]): Array[Byte] =
       if (a.isEmpty) b else if (b.isEmpty) a
       else {

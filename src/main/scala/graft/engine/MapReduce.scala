@@ -43,14 +43,17 @@ object MapReduce {
   }
 
   /** Executor-side tree reduction for associative reducers — no driver
-    * gather of per-row outputs; combine runs as partial aggregation per
-    * partition, then a logarithmic tree (`treeReduce`). */
+    * gather of per-row outputs; each partition's map outputs are reduced
+    * by ONE `fn.reduce` call on its executor (a reducer may override it
+    * with something cheaper than the pairwise fold), then the partials
+    * combine in a logarithmic tree (`treeReduce`). */
   def runTree(kv: Dataset[KV], fn: AssociativeMapReduceFn, depth: Int = 2): Result =
     try {
       val rdd = kv.rdd.map(r => fn.map(r.key, r.value))
       val reduced =
         if (rdd.isEmpty()) fn.zero
-        else rdd.treeReduce(fn.combine _, depth)
+        else rdd.mapPartitions(it => Iterator(fn.reduce(it.toSeq)))
+          .treeReduce(fn.combine _, depth)
       Result(true, Codes.OK, reduced)
     } catch {
       case _: Throwable => Result(false, Codes.ERR_SERVER)

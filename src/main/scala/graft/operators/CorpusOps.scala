@@ -1174,10 +1174,10 @@ object CorpusOps {
     * table (the classic BPE-training reduction — merges never rescan the
     * corpus); each of the [[BpeMerges]] rounds is then a pair-count
     * hash-aggregate over the VOCAB-sized table plus a one-row driver fetch
-    * of the argmax (driver-controlled iteration, the [[Dedup.dedupClusters]]
-    * pattern) and a narrow replace projection. The vocab table is
-    * materialized once; rounds stack ≤ [[BpeMerges]] narrow projections on
-    * top of its in-memory blocks. */
+    * of the argmax (driver-controlled iteration, the
+    * [[GraphKernels.connectedComponents]] pattern) and a narrow replace
+    * projection. The vocab table is materialized once; rounds stack
+    * ≤ [[BpeMerges]] narrow projections on top of its in-memory blocks. */
   def bpeVocab(spark: SparkSession, dir: String): DataFrame = {
     val (merges, _) = bpeTrain(spark, dir)
     import spark.implicits._
@@ -1270,10 +1270,10 @@ object CorpusOps {
     * candidate rows to the driver). Each generation is persisted eagerly
     * and its predecessor freed as soon as the next election job has
     * materialized it (residency ≤ 2 generations — the
-    * [[Dedup.dedupClusters]] loop discipline). Election semantics are
-    * IDENTICAL to the DataFrame formulation AND across both paths
-    * (spec-pinned merge-for-merge): overlapping pair counts weighted by
-    * word frequency (code-point windows, exactly Spark's `substring`
+    * [[GraphKernels.connectedComponents]] loop discipline). Election
+    * semantics are IDENTICAL to the DataFrame formulation AND across both
+    * paths (spec-pinned merge-for-merge): overlapping pair counts weighted
+    * by word frequency (code-point windows, exactly Spark's `substring`
     * semantics), max count, ties to the lexicographically least pair
     * under binary collation, left-to-right non-overlapping replace. The
     * one corpus-sized aggregate still runs as a full-width DataFrame

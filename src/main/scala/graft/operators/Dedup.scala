@@ -2317,220 +2317,19 @@ object Dedup {
     * pair graph, labeling every clustered doc with the MIN doc_id of its
     * component — the step a dedup pipeline actually needs after pair
     * mining (elect one keeper per component, drop the rest; pairs alone
-    * under-delete transitive groups A~B~C where A≁C).
-    *
-    * Execution: iterative min-label propagation over the edge list —
-    * label(n) ← min(label(n), min of neighbors' labels) until fixpoint,
-    * each round one equi-join + one groupBy. Rounds = component diameter;
-    * near-dup components are short chains in practice, and the O(log n)
-    * alternating star-contraction tier ([[connectedComponents]], its own
-    * oracle-checked query `dedup_clusters_star`) covers pathological
-    * diameters at corpus scale. Plain propagation keeps THIS query the
-    * simplest auditable formulation (the DuckDB oracle walks the same
-    * graph with a recursive CTE). Rounds are [[materialize]]d — the loop
-    * is DRIVER-CONTROLLED iteration, and without cutting lineage each
-    * round's plan re-derives all prior rounds (exponential plan growth) —
-    * and each superseded round is unpersisted as soon as its successor is
-    * materialized, so block-manager storage holds at most two rounds. */
-  /** Materialize `df` into an OWNED persisted RDD with a flat logical plan
-    * — the driver-controlled-iteration primitive. Cuts lineage like
-    * `localCheckpoint` (each round's plan reads the materialized rows, not
-    * the whole history) but hands back the RDD so the loop can
-    * `unpersist` superseded rounds instead of accumulating one
-    * corpus-node-sized block set per round for the session lifetime. */
-  private[operators] def materialize(df: DataFrame)
-      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-    val rdd = df.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
-  }
+    * under-delete transitive groups A~B~C where A≁C). Runs the house
+    * O(log n) star-contraction engine, [[GraphKernels.connectedComponents]];
+    * the DuckDB oracle walks the same graph with a recursive CTE. Also
+    * registered as `dedup_clusters_star`. */
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    GraphKernels.connectedComponents(dedupPairEdges(spark, dir))
+      .orderBy(col("doc_id"))
 
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = dedupNgramJaccard(spark, dir).select(col("d1"), col("d2"))
-    // symmetrize with ONE row-local explode, not union(pairs, reversed):
-    // the union referenced the whole pair-mining subtree in both legs,
-    // executing it twice inside this materialization (guide §2.4)
-    val (edges, edgesRdd) = materialize(pairs
-      .select(explode(array(
-          struct(col("d1"), col("d2")),
-          struct(col("d2").as("d1"), col("d1").as("d2")))).as("e"))
-      .select(col("e.d1").as("d1"), col("e.d2").as("d2")))
-    var (labels, labelsRdd) = materialize(
-      edges.select(col("d1").as("doc_id")).distinct()
-        .withColumn("cluster", col("doc_id")))
-    var changed = 1L
-    while (changed > 0) {
-      val neighborMin = edges
-        .join(labels, edges("d1") === labels("doc_id"))
-        .groupBy(col("d2").as("doc_id2"))
-        .agg(min(col("cluster")).as("ncluster"))
-      val (next, nextRdd) = materialize(labels
-        .join(neighborMin, labels("doc_id") === col("doc_id2"), "left_outer")
-        .select(col("doc_id"),
-          least(col("cluster"), coalesce(col("ncluster"), col("cluster")))
-            .as("cluster"),
-          (col("ncluster") < col("cluster")).as("shrunk")))
-      changed = next.filter(col("shrunk")).count()
-      labelsRdd.unpersist(blocking = false) // superseded round, free its blocks
-      labels = next.select(col("doc_id"), col("cluster"))
-      labelsRdd = nextRdd
-    }
-    edgesRdd.unpersist(blocking = false) // the result reads only the labels
-    // the FINAL round's blocks feed the returned frame — the harness frees
-    // them after the consuming action (ownership, not ContextCleaner)
-    graft.SharedFrames.sharedRdd(labelsRdd)
-    labels.orderBy(col("doc_id"))
-  }
-
-  /** The O(log n) TIER the propagation scaladoc cites: alternating
-    * large-star/small-star contraction (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond") over an arbitrary undirected
-    * edge set `(src, dst)` → `(doc_id, cluster)` with cluster = component
-    * min.
-    *
-    *  - large-star: every node u links each LARGER neighbor to the min of
-    *    its closed neighborhood — long chains fold toward their minimum
-    *    from every node at once;
-    *  - small-star: every node links its smaller neighbors (and itself)
-    *    to that min — stars flatten.
-    *
-    * Round count is O(log n) in component size (vs diameter for plain
-    * propagation — the difference between 8 rounds and 10⁶ on a pathological
-    * chain at corpus scale). Each round is two hash-aggregations + two
-    * equi-joins on the edge set; rounds are materialized via [[materialize]]
-    * and superseded rounds unpersisted immediately. Convergence = the
-    * canonical edge set reaches the composition's fixpoint, which is the
-    * per-component star (equivalence to plain propagation and the round
-    * bound are spec-pinned in PipelineOperatorsSpec; the registered
-    * `dedup_clusters_star` query runs THIS engine against the same
-    * recursive-CTE oracle as `dedup_clusters`). Node universe: endpoints
-    * of at least one NON-self-loop edge (a node appearing only as (x, x)
-    * names no pair and is dropped with the loop). */
-  def connectedComponents(edgesIn: DataFrame): DataFrame =
-    connectedComponentsWithRounds(edgesIn)._1
-
-  /** Once the CONTRACTED edge set fits this many rows, stop iterating and
-    * finish with a driver union-find over the collected remnant — the
-    * standard hybrid in production CC engines: every distributed round on
-    * a dwindling tail costs 3–4 full job round-trips to move a few
-    * thousand rows, where one collect + an O(E α(E)) fold is microseconds.
-    * The asymptotic path is untouched (rounds keep halving structure until
-    * the remnant FITS; a 10⁹-node graph still contracts O(log n) times
-    * before any collect), and the hybrid is exactness-preserving: each
-    * round's output has the same components as the input, so union-find on
-    * the remnant computes the same minima (spec-pinned hybrid ≡ pure, and
-    * the registered queries stay on the same DuckDB oracle). */
-  private[operators] final val CcDriverFinish = 10000L
-
-  private[operators] def connectedComponentsWithRounds(
-      edgesIn: DataFrame,
-      driverFinishAt: Long = CcDriverFinish): (DataFrame, Int) = {
-    // canonical state: directed (hi > lo), self-loops dropped, distinct.
-    // The input plan (for dedupClustersStar, the whole gram self-join) is
-    // computed EXACTLY ONCE into this materialization; the node set for
-    // the final labeling derives from it too, never from edgesIn (which
-    // would re-run the expensive upstream on every downstream action).
-    val (canon0, canon0Rdd) = materialize(edgesIn
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .filter(col("hi") > col("lo")).distinct())
-    var cur = canon0
-    var curRdd = canon0Rdd
-    var curCount = cur.count()
-    var rounds = 0
-    var done = curCount == 0L
-    while (!done && curCount > driverFinishAt) {
-      rounds += 1
-      // large-star over the undirected view: u's closed-neighborhood min m,
-      // edge (v, m) for every neighbor v > u (v > u ≥ m keeps it canonical)
-      val bidir = cur.select(col("hi").as("u"), col("lo").as("v"))
-        .union(cur.select(col("lo").as("u"), col("hi").as("v")))
-      val mins = bidir.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      // no distinct here: duplicate (hi, lo) emissions collapse for free in
-      // small-star's groupBy and final distinct — skipping the intermediate
-      // dedup saves one full shuffle per round
-      val large = bidir.join(mins, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-      // small-star on the canonical form: all of u's recorded neighbors are
-      // smaller, so m = min(lo); link them AND u itself to m
-      val smins = large.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-      val small = large.join(smins, Seq("hi"))
-        .select(col("lo").as("n"), col("m"))
-        .union(smins.select(col("hi").as("n"), col("m")))
-        .filter(col("n") > col("m")) // the min links itself — drop self-loop
-        .select(col("n").as("hi"), col("m").as("lo"))
-        .distinct()
-      val (next, nextRdd) = materialize(small)
-      val nextCount = next.count()
-      // fixpoint: same count and next ⊆ cur ⇒ set equality
-      done = nextCount == curCount && next.except(cur).isEmpty
-      // never unpersist the INITIAL canonical set — the final labeling's
-      // node universe reads it (registered for harness release below)
-      if (curRdd ne canon0Rdd) curRdd.unpersist(blocking = false)
-      cur = next; curRdd = nextRdd; curCount = nextCount
-    }
-    // driver finish: the loop exited with a small UNCONVERGED remnant —
-    // union-find it on the driver (path-halving; roots are component
-    // minima because union always attaches the larger root). Every
-    // contraction round preserves components, so the remnant's components
-    // are the original components, and the star it yields is exactly the
-    // star more distributed rounds would have reached.
-    if (!done && curCount > 0) {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        while (parent.getOrDefault(x, x) != x) {
-          val p = parent.getOrDefault(x, x)
-          parent.put(x, parent.getOrDefault(p, p)) // halve the path
-          x = parent.getOrDefault(x, x)
-        }
-        x
-      }
-      cur.collect().foreach { r =>
-        val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
-        if (a != b) {
-          if (a < b) parent.put(b, a) else parent.put(a, b)
-        }
-      }
-      val star = Seq.newBuilder[(Long, Long)]
-      parent.keySet().forEach { n =>
-        val root = find(n)
-        if (root != n) star += ((n, root))
-      }
-      val session = cur.sparkSession
-      import session.implicits._
-      cur = star.result().toDF("hi", "lo")
-    }
-    // at the fixpoint `cur` is one star per component: (node, component
-    // min) for every non-min node; min nodes label themselves. Canonical
-    // edges have hi > lo (no self-loops), so hi ∪ lo is the node universe.
-    val nodes = canon0.select(col("hi").as("doc_id"))
-      .union(canon0.select(col("lo").as("doc_id"))).distinct()
-    val labels = nodes
-      .join(cur.select(col("hi").as("doc_id"), col("lo").as("cluster")),
-        Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        coalesce(col("cluster"), col("doc_id")).as("cluster"))
-    // canon0 (the node universe) and the final round both feed the
-    // returned labeling — harness-released after the consuming action
-    graft.SharedFrames.sharedRdd(canon0Rdd)
-    if (curRdd ne canon0Rdd) graft.SharedFrames.sharedRdd(curRdd)
-    (labels, rounds)
-  }
-
-  /** [[dedupClusters]]' oracle-checked twin through the O(log n) star-
-    * contraction engine — same pair graph, same recursive-CTE oracle, so a
-    * green row proves the contraction computes exactly the transitive
-    * closure the propagation loop does. */
-  def dedupClustersStar(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = dedupNgramJaccard(spark, dir)
+  private def dedupPairEdges(spark: SparkSession, dir: String): DataFrame =
+    dedupNgramJaccard(spark, dir)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    connectedComponents(pairs).orderBy(col("doc_id"))
-  }
 
-  /** [[dedupClustersStar]] with the driver-finish hybrid DISABLED
+  /** [[dedupClusters]] with the driver-finish hybrid DISABLED
     * (driverFinishAt = 0): every contraction round runs distributed to
     * the fixpoint. At test scale the hybrid's cutoff short-circuits the
     * whole graph to the driver union-find, so without this registration
@@ -2538,12 +2337,9 @@ object Dedup {
     * pins, never the DuckDB equality gate. Same pair graph, same oracle
     * — a green row proves the distributed rounds compute the transitive
     * closure exactly. */
-  def dedupClustersStarDistributed(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = dedupNgramJaccard(spark, dir)
-      .select(col("d1").as("src"), col("d2").as("dst"))
-    connectedComponentsWithRounds(pairs, driverFinishAt = 0L)._1
-      .orderBy(col("doc_id"))
-  }
+  def dedupClustersStarDistributed(spark: SparkSession, dir: String): DataFrame =
+    GraphKernels.connectedComponentsWithRounds(dedupPairEdges(spark, dir),
+      driverFinishAt = 0L)._1.orderBy(col("doc_id"))
 
   /** Oracle: the same components via recursive reachability (min label over
     * every node reachable from each node; UNION dedups so the walk
@@ -3204,24 +3000,21 @@ object Dedup {
       .withColumn("ap", col("ai")).withColumn("bp", col("bi"))
     // base-16 LCP digits: at level k (width 16^k) up to FIFTEEN advances
     // can land before the digit is exhausted (a 16th would contradict
-    // the level-(k+1) non-match above it). ONE join per level: the pair
-    // row explodes into its two (side, doc, cursor) probes, the level
-    // frame streams through a single build-side-first right_outer (AQE
-    // broadcasts the small gated PAIR side — the level frame is never
-    // exchanged OR broadcast), and a max-when regroup keyed on the pair
-    // folds both sides back — the r18 explode-symmetrization discipline
-    // applied to the descend's per-side lookups, halving the
-    // corpus-sized level-frame scans per level (two right_outer joins
-    // before); the added regroup exchange carries only the gated pair
-    // subset. The kept levels carry their own +j·w lead ranks, so the
-    // fifteen sub-steps stay row-local conditionals. Level K−1 runs
-    // WITHOUT a probe join: its per-side ranks rode in on the adjacency
-    // join (cursors are still at ai/bi there). Those carried ranks use
-    // pairedFrame's −1 past-end sentinel instead of null; a −1 === −1
-    // "advance" can only fire when BOTH cursors are past their
-    // documents' ends, which (the earlier sub-steps having landed)
-    // means both suffixes already matched to their final token — the
-    // remaining-length cap below truncates the over-advance to the
+    // the level-(k+1) non-match above it). TWO joins per level: the
+    // level frame, projected once per side, is right_outer-joined to the
+    // pair frame on (ad, ap) and then on (bd, bp), so each join attaches
+    // one side's ranks at its current cursor and keeps every pair row
+    // (a cursor past its document's end finds no rank and reads null).
+    // The level frame is scanned once per side per level; the pair side
+    // is the small gated subset. The kept levels carry their own +j·w
+    // lead ranks, so the fifteen sub-steps stay row-local conditionals.
+    // Level K−1 runs WITHOUT a probe join: its per-side ranks rode in on
+    // the adjacency join (cursors are still at ai/bi there). Those
+    // carried ranks use pairedFrame's −1 past-end sentinel instead of
+    // null; a −1 === −1 "advance" can only fire when BOTH cursors are
+    // past their documents' ends, which (the earlier sub-steps having
+    // landed) means both suffixes already matched to their final token
+    // — the remaining-length cap below truncates the over-advance to the
     // exact LCP, and −1 never equals a live rank (md5 domain ≥ 0,
     // ranks ≥ 1), so cross cases stay non-advances.
     for (k <- K - 1 to 0 by -1) {

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.Tables.t
 
 /** Graph analytics over the document-similarity graph, beyond reachability
-  * (connected components live in [[Dedup]]): PageRank in EXACT fixed-point
-  * arithmetic, so the iterative ranking — the canonical "many rounds of
-  * join + aggregate" distributed workload — is bit-replayable in SQL.
+  * (connected components live in [[GraphKernels]]): PageRank in EXACT
+  * fixed-point arithmetic, so the iterative ranking — the canonical "many
+  * rounds of join + aggregate" distributed workload — is bit-replayable
+  * in SQL.
   *
   * Graph: trigram-Jaccard ≥ [[GraphRank.PrTau]] pairs over the
   * [[GraphRank.PrCap]]-doc verification slice (the
@@ -183,21 +184,15 @@ object GraphRank {
       .filter(col("doc_id") < PrCap).select(col("doc_id").as("v"))
     val edges = graft.SharedFrames.shared(simEdges(spark, dir))
     // dist 0, root = self: enc = 0·2^32 + v. Each round references
-    // `reach` twice (carry ∪ relax) — rounds are lineage-cut via
-    // [[Dedup.materialize]] (the [[graphKcore]] discipline): the
-    // unbroken plan embeds the previous round twice, doubling per round.
-    var (reach, r0Rdd) = Dedup.materialize(
-      nodes.filter(col("v") % BfsSeedMod === 0L)
-        .select(col("v"), col("v").as("enc")))
-    graft.SharedFrames.sharedRdd(r0Rdd)
-    (1 to BfsIters).foreach { _ =>
+    // `reach` twice (carry ∪ relax), so rounds are lineage-cut
+    // ([[GraphKernels.fixedRounds]]).
+    val seeds = nodes.filter(col("v") % BfsSeedMod === 0L)
+      .select(col("v"), col("v").as("enc"))
+    val reach = GraphKernels.fixedRounds(seeds, BfsIters) { reach =>
       val cand = edges
         .join(reach.withColumnRenamed("v", "src"), Seq("src"))
         .select(col("dst").as("v"), (col("enc") + BfsEncBase).as("enc"))
-      val (next, rdd) = Dedup.materialize(
-        reach.union(cand).groupBy(col("v")).agg(min(col("enc")).as("enc")))
-      graft.SharedFrames.sharedRdd(rdd)
-      reach = next
+      reach.union(cand).groupBy(col("v")).agg(min(col("enc")).as("enc"))
     }
     nodes.join(reach, Seq("v"), "left_outer")
       .select(col("v").as("doc_id"),
@@ -346,25 +341,20 @@ object GraphRank {
     * GraphRankSpec pins that the peel has CONVERGED by then at every
     * SF, so the fixed-round answer IS the fixpoint). Each round: filter
     * live edges by survivor membership on both endpoints (two co-keyed
-    * joins), one partial-combinable degree count, one filter — the CC
-    * loop's shape, rounds lineage-cut via [[Dedup.materialize]] since
-    * the survivor set is referenced twice per round. */
+    * joins), one partial-combinable degree count, one filter; rounds are
+    * lineage-cut ([[GraphKernels.fixedRounds]]) since the survivor set is
+    * referenced twice per round. */
   def graphKcore(spark: SparkSession, dir: String): DataFrame = {
     val nodes = t(spark, dir, "documents")
       .filter(col("doc_id") < PrCap).select(col("doc_id").as("v"))
     val sym = graft.SharedFrames.shared(simEdges(spark, dir))
-    var (surv, rdd0) = Dedup.materialize(
-      sym.select(col("src").as("v")).distinct())
-    graft.SharedFrames.sharedRdd(rdd0)
-    (1 to KCoreIters).foreach { _ =>
-      val alive = sym
+    val surv = GraphKernels.fixedRounds(
+        sym.select(col("src").as("v")).distinct(), KCoreIters) { surv =>
+      sym
         .join(surv.withColumnRenamed("v", "src"), Seq("src"))
         .join(surv.withColumnRenamed("v", "dst"), Seq("dst"))
-      val (next, rdd) = Dedup.materialize(
-        alive.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= KCoreK).select(col("src").as("v")))
-      graft.SharedFrames.sharedRdd(rdd)
-      surv = next
+        .groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= KCoreK).select(col("src").as("v"))
     }
     val coreDeg = sym
       .join(surv.withColumnRenamed("v", "src"), Seq("src"))
@@ -429,59 +419,34 @@ object GraphRank {
     OracleSql.materializeCtes(raw)
   }
 
-  /** Synchronous-round count and vote-packing base for [[graphLabelprop]]. */
+  /** Synchronous-round count for [[graphLabelprop]], and the
+    * (count, label) packing base of its oracle's election. */
   final val LpIters = 4
   final val LpEncBase = 1L << 32
 
-  /** LABEL-PROPAGATION COMMUNITY DETECTION (Raghavan et al. 2007, the
-    * synchronous deterministic variant) over the τ-similarity graph — the
-    * community-structure member of the graph family (reachability = CC in
-    * [[Dedup]], ranking = [[pagerankSim]], traversal = [[graphBfs]],
-    * density = [[graphKcore]]): each node adopts the label its neighbors
-    * hold most often, so near-dup neighborhoods collapse to shared labels
-    * WITHOUT requiring full transitive connectivity the way CC does.
-    *
-    * Determinism (classic LPA is run-order-dependent; this variant is
-    * not): all nodes update SIMULTANEOUSLY each round from the previous
-    * round's labels, and the vote is decided by (max count, then MIN
-    * label). The election is the house min-struct discipline packed into
-    * ONE BIGINT — `([[PrCap]] − cnt)·2^32 + label` (cnt ≤ deg < PrCap,
-    * label < PrCap < 2^32, so the packing is lexicographic by
-    * construction) — making each round: one equi-join of edges against
-    * labels on src, one partial-combinable (dst, label) count, one
-    * partial-combinable `min` per dst. No windows, no skewed-key stage:
-    * a label shared by millions of neighbors at 100× folds map-side into
-    * per-partition partials before the exchange. Label lineage is LINEAR
-    * (labels referenced once per round — isolated nodes re-derive their
-    * own id rather than carrying the previous frame), so no per-round
-    * materialization is needed, the [[rankRounds]] shape. [[LpIters]]
-    * synchronous rounds, unrolled identically in the oracle. */
+  /** LABEL-PROPAGATION COMMUNITY DETECTION over the τ-similarity graph —
+    * the community-structure member of the graph family (reachability =
+    * CC in [[GraphKernels]], ranking = [[pagerankSim]], traversal =
+    * [[graphBfs]], density = [[graphKcore]]): each node adopts the label
+    * its neighbors hold most often, so near-dup neighborhoods collapse to
+    * shared labels WITHOUT requiring full transitive connectivity the way
+    * CC does. [[LpIters]] rounds of [[GraphKernels.labelPropagation]]
+    * (synchronous, ties to the min label). The oracle packs the same
+    * election into one BIGINT `([[PrCap]] − cnt)·2^32 + label`, which is
+    * lexicographic on this slice (cnt ≤ deg < PrCap, label < PrCap < 2^32);
+    * the Spark side needs no such bound. */
   def graphLabelprop(spark: SparkSession, dir: String): DataFrame = {
     val nodes = t(spark, dir, "documents")
       .filter(col("doc_id") < PrCap).select(col("doc_id").as("v"))
     val edges = graft.SharedFrames.shared(simEdges(spark, dir))
-    var labels = nodes.select(col("v"), col("v").as("lab"))
-    (1 to LpIters).foreach { _ =>
-      val votes = edges
-        .join(labels.withColumnRenamed("v", "src"), Seq("src"))
-        .groupBy(col("dst"), col("lab")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("dst"))
-        .agg(min((lit(PrCap) - col("cnt")) * LpEncBase + col("lab"))
-          .as("enc"))
-        .select(col("dst").as("v"), (col("enc") % LpEncBase).as("elab"))
-      labels = nodes.join(votes, Seq("v"), "left_outer")
-        .select(col("v"), coalesce(col("elab"), col("v")).as("lab"))
-    }
-    val fin = graft.SharedFrames.shared(labels)
-    val sizes = fin.groupBy(col("lab")).agg(count(lit(1)).as("csize"))
-    fin.join(sizes, Seq("lab"))
+    GraphKernels.labelPropagation(nodes, edges, LpIters)
       .select(col("v").as("doc_id"), col("lab").as("community"),
         col("csize"))
       .orderBy(col("doc_id"))
   }
 
   /** Oracle: the graph CTEs + [[LpIters]] unrolled synchronous vote
-    * rounds with the identical BIGINT (count, label) packing. */
+    * rounds, the same election packed into one BIGINT per (count, label). */
   val graphLabelpropSql: String = {
     val rounds = (1 to LpIters).map { i =>
       s"""l$i AS (

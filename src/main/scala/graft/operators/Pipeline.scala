@@ -10,7 +10,7 @@ import graft.Tables.t
   *   raw documents
   *     → exact-dedup keeper election + quality gate + language selection
   *       ([[TextAnalysis.corpusClean]])
-  *     → NEAR-dup cluster keeper election ([[Dedup.connectedComponents]]
+  *     → NEAR-dup cluster keeper election ([[Dedup.dedupClusters]]
   *       over the j≥0.7 pair graph — exact dedup only collapses
   *       byte-identical docs; every non-min member of a near-dup
   *       component is dropped here)
@@ -24,9 +24,9 @@ import graft.Tables.t
   * composed DuckDB oracle — a green row proves the stages agree end to
   * end, including the interaction the standalone gates cannot see (shard
   * boundaries depend on exactly which docs survive the earlier stages).
-  * The near-dup stage runs the O(log n) star-contraction engine; its
-  * equivalence to plain propagation is itself oracle-pinned
-  * (`dedup_clusters` vs `dedup_clusters_star`).
+  * The near-dup stage runs the O(log n) star-contraction engine
+  * ([[GraphKernels.connectedComponents]]), the same code the
+  * oracle-pinned `dedup_clusters` runs.
   *
   * Scale shape: semi/anti joins on doc_id (broadcastable survivor id
   * sets; at full scale AQE picks the join side), then the two-phase
@@ -46,7 +46,7 @@ object Pipeline {
     // near-dup (mining over survivors only would resurface it — and is
     // measured VACUOUS on this corpus: zero j≥0.7 pairs survive cleaning
     // at sf0.01/0.1, so the stage would silently do nothing).
-    val nonKeepers = Dedup.dedupClustersStar(spark, dir)
+    val nonKeepers = Dedup.dedupClusters(spark, dir)
       .filter(col("doc_id") =!= col("cluster")).select("doc_id")
     // materialize the (doc_id, text) rows that survived cleaning + keeper
     // election ONCE — decontamination and packing both read these rows
@@ -109,7 +109,7 @@ object Pipeline {
     val cleanedIds = graft.SharedFrames.shared(
       TextAnalysis.corpusClean(spark, dir).select("doc_id"))
     val nonKeepers = graft.SharedFrames.shared(
-      Dedup.dedupClustersStar(spark, dir)
+      Dedup.dedupClusters(spark, dir)
         .filter(col("doc_id") =!= col("cluster")).select("doc_id"))
     val survivors = graft.SharedFrames.shared(
       t(spark, dir, "documents")

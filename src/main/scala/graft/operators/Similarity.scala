@@ -2748,107 +2748,44 @@ object Similarity {
        |FROM r WHERE rnk <= $KnnK
        |ORDER BY src, rnk""".stripMargin)
 
-  /** Hash-to-min rounds for [[knnComponents]] — each round takes the
-    * min over self, in-neighbors, and the label's own label (pointer
-    * jump), so the minimum component id spreads along paths AND through
-    * label indirection: convergence in O(log diameter) rounds, pinned
-    * converged at every test SF by KnnComponentsSpec (6 was one round
-    * short of the fixpoint at sf0.01 — two leaf nodes still carried a
-    * stale indirection). */
+  /** Hash-to-min round count of the [[knnComponentsSql]] oracle — each
+    * round takes the min over self, in-neighbors, and the label's own
+    * label (pointer jump), converging in O(log diameter) rounds. Spark
+    * runs the star-contraction engine instead; the DuckDB gate proves the
+    * two agree at every test SF. */
   final val KnnCcIters = 8
 
   /** CONNECTED COMPONENTS of the full-corpus kNN graph — the graph
     * consumer the 200-node slice contract ([[GraphRank.PrCap]]) only
-    * simulates, now running on the whole corpus (VERDICT r17 item 4):
-    * cluster membership for every vector, the capability a 100 TB
-    * dedup-clustering user actually wants (near-dup cluster triage,
-    * leak-free split keys, per-cluster sampling).
+    * simulates, running on the whole corpus: cluster membership for
+    * every vector, the capability a 100 TB dedup-clustering user actually
+    * wants (near-dup cluster triage, leak-free split keys, per-cluster
+    * sampling).
     *
-    * Edges are [[knnGraphIvf]]'s linear-sized output (≤ k per node),
-    * symmetrized; labels converge by HASH-TO-MIN (Rastogi et al. 2013):
-    * each synchronous round sets
-    * `lab(v) ← min(lab(v), min over neighbors' labs, lab(lab(v)))`
-    * — the pointer-jump term halves label-chain depth per round, so
-    * [[KnnCcIters]] rounds converge for diameters the plain
-    * min-propagation would need 2^[[KnnCcIters]] rounds to cover.
-    * Deterministic: pure integer mins, engine-neutral, no tie rules.
-    *
-    * 100 TB shape: every round is one edges⋈labels equi-join + one
-    * partial-combinable per-node min + one labels⋈labels equi-join —
-    * all linear in n (edges ≤ 2kn); per-round frames are LINEAGE-CUT
-    * ([[Dedup.materialize]]'s RDD cut, superseded rounds unpersisted
-    * inline) because each round references the previous labels THREE
-    * times (self, neighbor-min, jump) — with plain persistence the
-    * logical plan triples per round, the documented exponential-lineage
-    * trap (measured: heap exhaustion at 6 rounds on a 500-node corpus).
-    * The component id is the min vec_id of the component — stable under
-    * corpus growth. */
+    * Edges are [[knnGraphIvf]]'s linear-sized output (≤ k per node); the
+    * raw DIRECTED kNN edges feed [[GraphKernels.connectedComponents]]
+    * (O(log n) star contraction with a driver union-find finish)
+    * directly — its own (hi, lo) canonicalization subsumes any
+    * symmetrize + distinct shuffle. Nodes outside every edge are their
+    * own component. The component id is the min vec_id of the component
+    * — stable under corpus growth; KnnComponentsSpec pins labels and
+    * csize ≡ a driver union-find over the same edges. */
   def knnComponents(spark: SparkSession, dir: String): DataFrame = {
-    // r18 optimization: run the house O(log n) star-contraction engine
-    // ([[Dedup.connectedComponents]] — alternating large/small-star with
-    // the ≤[[Dedup.CcDriverFinish]]-row driver union-find finish) instead
-    // of [[KnnCcIters]] fixed hash-to-min rounds: the converged labels
-    // are the SAME true components (component id = min vec_id), which is
-    // all the registered output contains — the dedup_clusters vs
-    // dedup_clusters_star precedent, where two engines share one oracle.
-    // KnnComponentsSpec pins labels ≡ a driver union-find independent of
-    // engine, and [[knnComponentsIters]] keeps the hash-to-min reference
-    // the convergence pin compares against. Wins: no per-round
-    // materialization chain (8 rounds → O(log n) with an early driver
-    // finish), and the raw DIRECTED kNN edges feed the engine directly —
-    // its own (hi, lo) canonicalization subsumes the symmetrize +
-    // distinct shuffle (measured 4.0 s → ~1.7 s at sf0.1).
     val knn = knnGraphIvf(spark, dir)
       .select(col("src"), col("nbr").as("dst"))
-    val cc = Dedup.connectedComponents(knn)
+    val cc = GraphKernels.connectedComponents(knn)
     val nodes = withNorm(spark, dir).filter(col("nrm") > 0)
       .select(col("vec_id").as("v"))
-    val labels = graft.SharedFrames.shared(
+    GraphKernels.withSizes(
       nodes.join(cc.select(col("doc_id").as("v"), col("cluster").as("lab")),
           Seq("v"), "left_outer")
         .select(col("v"), coalesce(col("lab"), col("v")).as("lab")))
-    val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("csize"))
-    labels.join(sizes, Seq("lab"))
       .select(col("v").as("vec_id"), col("lab").as("component"),
         col("csize"))
       .orderBy(col("vec_id"))
   }
 
-  /** [[knnComponents]] with an explicit round count — the spec pins
-    * convergence by comparing iters vs iters+1. */
-  private[operators] def knnComponentsIters(spark: SparkSession,
-      dir: String, iters: Int): DataFrame = {
-    val knn = knnGraphIvf(spark, dir).select(col("src"), col("nbr"))
-    val sym = graft.SharedFrames.shared(symEdges(knn))
-    val nodes = withNorm(spark, dir).filter(col("nrm") > 0)
-      .select(col("vec_id").as("v"))
-    var (labels, labelsRdd) =
-      Dedup.materialize(nodes.select(col("v"), col("v").as("lab")))
-    (1 to iters).foreach { _ =>
-      val nb = sym
-        .join(labels.select(col("v").as("src"), col("lab").as("slab")),
-          Seq("src"))
-        .groupBy(col("nbr")).agg(min(col("slab")).as("m"))
-      val jump = labels.select(col("v").as("jv"), col("lab").as("jlab"))
-      val (next, nextRdd) = Dedup.materialize(
-        labels.join(nb, labels("v") === nb("nbr"), "left_outer")
-          .join(jump, labels("lab") === jump("jv"))
-          .select(labels("v"),
-            least(labels("lab"), coalesce(col("m"), labels("lab")),
-              col("jlab")).as("lab")))
-      labelsRdd.unpersist(blocking = false)
-      labels = next
-      labelsRdd = nextRdd
-    }
-    graft.SharedFrames.sharedRdd(labelsRdd)
-    val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("csize"))
-    labels.join(sizes, Seq("lab"))
-      .select(col("v").as("vec_id"), col("lab").as("component"),
-        col("csize"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** Symmetrized (src, nbr) edge set of a kNN result WITHOUT consuming
+  /** Symmetrized (src, dst) edge set of a kNN result WITHOUT consuming
     * the kNN frame twice: a `union(knn, knn.reversed)` references the
     * upstream candidate join + ranking aggregate in BOTH legs, so the
     * expensive subtree executes twice inside the one symmetrization
@@ -2858,9 +2795,9 @@ object Similarity {
     * subtrees before removing shuffles). */
   private def symEdges(knn: DataFrame): DataFrame =
     knn.select(explode(array(
-        struct(col("src"), col("nbr")),
-        struct(col("nbr").as("src"), col("src").as("nbr")))).as("e"))
-      .select(col("e.src").as("src"), col("e.nbr").as("nbr"))
+        struct(col("src"), col("nbr").as("dst")),
+        struct(col("nbr").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
 
   /** Synchronous vote rounds for [[knnLabelprop]]. */
@@ -2872,52 +2809,16 @@ object Similarity {
     * ONE component), but community structure survives — LPA elects the
     * label most of a node's neighbors hold, so dense near-dup
     * neighborhoods keep shared labels without requiring global
-    * connectivity. Same deterministic synchronous variant as
-    * [[GraphRank.graphLabelprop]] (Raghavan et al. 2007): all nodes
-    * update simultaneously from the previous round's labels, vote
-    * decided by (max count, then MIN label).
-    *
-    * The election is NOT the slice face's packed-BIGINT min (its
-    * (PrCap − cnt)·2³² + lab packing needs lab < 2³² and cnt < PrCap —
-    * fine for a 200-node slice, unsound for arbitrary vec_ids at
-    * corpus scale). Instead: two partial-combinable aggregates — max
-    * count per node, then min label among the tied — every stage an
-    * equi-join or map-side-combinable agg over the linear edge set, no
-    * packing bound at any corpus size. Labels have LINEAR lineage
-    * (referenced once per round; isolated nodes re-derive their own
-    * id), so unlike [[knnComponents]] no per-round materialization is
-    * needed. [[KnnLpIters]] synchronous rounds, unrolled identically
-    * in the oracle. */
+    * connectivity. [[KnnLpIters]] rounds of
+    * [[GraphKernels.labelPropagation]] over the symmetrized kNN edges
+    * (shared: every round reads them), unrolled identically in the
+    * oracle. */
   def knnLabelprop(spark: SparkSession, dir: String): DataFrame = {
     val knn = knnGraphIvf(spark, dir).select(col("src"), col("nbr"))
     val sym = graft.SharedFrames.shared(symEdges(knn))
     val nodes = withNorm(spark, dir).filter(col("nrm") > 0)
       .select(col("vec_id").as("v"))
-    var labels = nodes.select(col("v"), col("v").as("lab"))
-    (1 to KnnLpIters).foreach { _ =>
-      // (max count, then MIN label) as ONE lexicographic max over
-      // struct(cnt, -slab): cnt decides first, and among tied counts the
-      // max of -slab IS the min slab (vec_ids are non-negative). The
-      // r18-original two-consumer formulation (votes → per-node max,
-      // votes ⋈ max → min slab) consumed the votes frame TWICE per
-      // round without materializing it, so round r's whole subtree
-      // re-executed ~2^(r-1) times — the documented exponential-lineage
-      // trap (measured: 10.2 s → this shape + symEdges ≈ 3 s at sf0.1).
-      // Votes is now consumed ONCE, lineage stays linear, and no
-      // per-round materialization is needed.
-      val elected = sym
-        .join(labels.select(col("v").as("src"), col("lab").as("slab")),
-          Seq("src"))
-        .groupBy(col("nbr"), col("slab")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("nbr"))
-        .agg(max(struct(col("cnt"), (-col("slab")).as("nslab"))).as("w"))
-        .select(col("nbr").as("v"), (-col("w.nslab")).as("elab"))
-      labels = nodes.join(elected, Seq("v"), "left_outer")
-        .select(col("v"), coalesce(col("elab"), col("v")).as("lab"))
-    }
-    val fin = graft.SharedFrames.shared(labels)
-    val sizes = fin.groupBy(col("lab")).agg(count(lit(1)).as("csize"))
-    fin.join(sizes, Seq("lab"))
+    GraphKernels.labelPropagation(nodes, sym, KnnLpIters)
       .select(col("v").as("vec_id"), col("lab").as("community"),
         col("csize"))
       .orderBy(col("vec_id"))
@@ -2958,9 +2859,9 @@ object Similarity {
   }
 
   /** Oracle: the [[knnGraphIvfCtes]] edge replay + [[KnnCcIters]]
-    * unrolled hash-to-min rounds with the identical min-of-three rule.
-    * Every label CTE is referenced three times per round —
-    * MATERIALIZED (the documented DuckDB inlining trap). */
+    * unrolled hash-to-min rounds (min over self, in-neighbors and the
+    * label's own label). Every label CTE is referenced three times per
+    * round — MATERIALIZED (the documented DuckDB inlining trap). */
   val knnComponentsSql: String = {
     val rounds = (1 to KnnCcIters).map { i =>
       val prev = s"l${i - 1}"

@@ -9,6 +9,9 @@ object ExplainAll {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
+      // Verify's session settings, so the plans are the ones Verify runs
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       // see Bench.scala: single-JVM harness disables artifact-isolation
       .config("spark.sql.artifact.isolation.enabled", "false")

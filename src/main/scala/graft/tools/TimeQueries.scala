@@ -4,8 +4,16 @@ import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Ad-hoc timing/metrics harness for registered queries (dev tool).
-  * args: query names; with -metrics, prints per-operator rows/time. */
+  * args: query names and flags; -metrics prints per-operator rows,
+  * -phases prints the planning phase times. */
 object TimeQueries {
+  /** Splits args into (flags, query names): every arg with a leading dash
+    * is a flag, never a query name. No names → the default query. */
+  private[tools] def parseArgs(args: Seq[String]): (Set[String], Seq[String]) = {
+    val (flags, names) = args.partition(_.startsWith("-"))
+    (flags.toSet, if (names.isEmpty) Seq("dedup_simhash") else names)
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")
@@ -16,11 +24,7 @@ object TimeQueries {
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val metrics = args.contains("-metrics")
-    val names = args.filterNot(_ == "-metrics").toSeq match {
-      case Nil => Seq("dedup_simhash")
-      case ns => ns
-    }
+    val (flags, names) = parseArgs(args.toSeq)
     try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
     catch { case _: Throwable => () }
     for (n <- names; pass <- 1 to 3) {
@@ -36,13 +40,13 @@ object TimeQueries {
       val t2 = System.nanoTime()
       println(f"TIMING $n pass$pass ${(t2 - t0) / 1e9}%.3f s" +
         f" (build ${(t1 - t0) / 1e9}%.3f, exec ${(t2 - t1) / 1e9}%.3f)")
-      if (args.contains("-phases")) {
+      if (flags("-phases")) {
         val ph = df.queryExecution.tracker.phases
         ph.toSeq.sortBy(_._2.startTimeMs).foreach { case (name, s) =>
           println(f"PHASE  $name%-16s ${(s.endTimeMs - s.startTimeMs) / 1e3}%.3f s")
         }
       }
-      if (metrics && pass == 3) {
+      if (flags("-metrics") && pass == 3) {
         def walk(p: org.apache.spark.sql.execution.SparkPlan, d: Int): Unit = {
           val rows = p.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
           println(f"METRIC ${" " * d}${p.nodeName}%-40s rows=$rows")

@@ -147,15 +147,22 @@ class EngineMapReduceSpec extends AnyFunSuite with SparkSpec {
     assert(s(f.combine(f.zero, x)) == s(x) && s(f.combine(x, f.zero)) == s(x))
   }
 
-  test("MrAggregator: Catalyst-aggregate execution is deterministic (sorted merge combine)") {
-    val e = mkEngine()
-    val r = MrAggregator.run(e.kv.view, BuiltinFuncs.AllKeysAssoc)
+  test("tree tier at 60k keys: exact sorted key list, combines bounded by partitions") {
+    import spark.implicits._
+    // shuffled keys over 4 partitions: each partition's outputs are
+    // reduced by ONE sorting reduce, so combine runs only across the
+    // partition partials. The per-row pairwise-merge fold this replaces
+    // was quadratic in the keys per partition.
+    val keys = new scala.util.Random(7).shuffle((0 until 60000).map(i => f"key$i%06d"))
+    val kv = keys.map(k => KV(k, Array.emptyByteArray)).toDS().repartition(4)
+    val r = MapReduce.runTree(kv, BuiltinFuncs.AllKeysAssoc)
     assert(r.succeeded)
-    assert(r.dataUtf8.split("\n").toSeq == (1 to 8).map(i => s"k$i"))
-    // empty table: the aggregation yields the reducer's zero
-    val empty = new Engine(spark, EngineOptions())
-    val r0 = MrAggregator.run(empty.kv.view, BuiltinFuncs.AllKeysAssoc)
-    assert(r0.succeeded && r0.data.isEmpty)
+    assert(r.dataUtf8.split("\n").toSeq == keys.sorted)
+    CountingAllKeysAssoc.combines.set(0)
+    val c = MapReduce.runTree(kv, CountingAllKeysAssoc)
+    assert(c.succeeded && c.dataUtf8 == r.dataUtf8)
+    assert(CountingAllKeysAssoc.combines.get <= kv.rdd.getNumPartitions,
+      s"${CountingAllKeysAssoc.combines.get} combines for 4 partitions")
   }
 
   test("treeReduce on empty table returns zero, not a crash") {
@@ -193,5 +200,19 @@ object ThreadRecordingAssocFn extends AssociativeMapReduceFn {
     threads.add(Thread.currentThread().getName)
     if (a.isEmpty) b else if (b.isEmpty) a
     else (new String(a, "UTF-8") + "\n" + new String(b, "UTF-8")).getBytes("UTF-8")
+  }
+}
+
+/** [[BuiltinFuncs.AllKeysAssoc]] with a combine-call counter. */
+object CountingAllKeysAssoc extends AssociativeMapReduceFn {
+  val combines = new java.util.concurrent.atomic.AtomicLong()
+  def map(key: String, value: Array[Byte]): Array[Byte] =
+    BuiltinFuncs.AllKeysAssoc.map(key, value)
+  def zero: Array[Byte] = BuiltinFuncs.AllKeysAssoc.zero
+  override def reduce(all: Seq[Array[Byte]]): Array[Byte] =
+    BuiltinFuncs.AllKeysAssoc.reduce(all)
+  def combine(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    combines.incrementAndGet()
+    BuiltinFuncs.AllKeysAssoc.combine(a, b)
   }
 }

@@ -229,15 +229,9 @@ class PipelineOperatorsSpec extends AnyFunSuite with SparkSpec {
       "incremental dedup dropped nothing — vacuous signature")
   }
 
-  test("star contraction ≡ plain propagation on the corpus graph; O(log n) rounds on an adversarial chain") {
+  test("star CC: log rounds on a chain; hybrid ≡ pure; ≡ union-find") {
     import spark.implicits._
-    // 1. equivalence on the real near-dup pair graph
-    val plain = Dedup.dedupClusters(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.dedupClustersStar(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == plain, "star contraction labels diverge from propagation")
-    // 2. adversarial chain 0-1-2-…-255: plain propagation needs ~diameter
+    // 1. adversarial chain 0-1-2-…-255: plain propagation needs ~diameter
     //    (255) rounds; the alternating contraction must stay logarithmic.
     //    Kiveris et al. bound the alternation by O(log n) star rounds —
     //    pin 3·log₂(256) + 2 = 26 as a generous ceiling (measured: ≤ 8).
@@ -245,28 +239,28 @@ class PipelineOperatorsSpec extends AnyFunSuite with SparkSpec {
     //    bound must hold without the small-remnant union-find shortcut.
     val chain = (0L until 255L).map(i => (i, i + 1)).toDF("src", "dst")
     val (labels, rounds) =
-      Dedup.connectedComponentsWithRounds(chain, driverFinishAt = 0)
+      GraphKernels.connectedComponentsWithRounds(chain, driverFinishAt = 0)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 256 && got.forall(_._2 == 0L),
       s"chain not fully contracted to root 0: ${got.filter(_._2 != 0L).take(5).toSeq}")
     assert(rounds > 0 && rounds <= 26,
       s"contraction took $rounds rounds on a 256-chain")
-    // 2b. the hybrid (driver union-find once the remnant fits) computes
+    // 1b. the hybrid (driver union-find once the remnant fits) computes
     //     EXACTLY the pure-distributed labels — on the chain, where the
     //     default cutoff collects immediately, and mid-contraction at a
     //     cutoff that forces one distributed round first
-    for (cutoff <- Seq(Dedup.CcDriverFinish, 100L)) {
-      val hybrid = Dedup.connectedComponentsWithRounds(chain, cutoff)._1
+    for (cutoff <- Seq(GraphKernels.CcDriverFinish, 100L)) {
+      val hybrid = GraphKernels.connectedComponentsWithRounds(chain, cutoff)._1
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(hybrid == got.toMap,
         s"hybrid (cutoff $cutoff) diverges from pure-distributed labels")
     }
-    // 3. random-graph property: labels match a driver union-find
+    // 2. random-graph property: labels match a driver union-find
     val rnd = new scala.util.Random(42)
     val redges = (0 until 300).map(_ => (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter(e => e._1 != e._2)
     val rdf = redges.toDF("src", "dst")
-    val rgot = Dedup.connectedComponents(rdf).collect()
+    val rgot = GraphKernels.connectedComponents(rdf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
@@ -329,7 +323,7 @@ class PipelineOperatorsSpec extends AnyFunSuite with SparkSpec {
     // election, and escaped flagging
     assert(survivorIds.subsetOf(cleaned), "packed doc not in cleaned set")
     assert(survivorIds.intersect(flagged).isEmpty, "packed doc is flagged")
-    val nonKeepers = Dedup.dedupClustersStar(spark, dir).collect()
+    val nonKeepers = Dedup.dedupClusters(spark, dir).collect()
       .collect { case r if r.getLong(0) != r.getLong(1) => r.getLong(0) }.toSet
     assert(survivorIds.intersect(nonKeepers).isEmpty,
       "packed doc is a non-keeper near-duplicate")
@@ -346,7 +340,7 @@ class PipelineOperatorsSpec extends AnyFunSuite with SparkSpec {
     val sf01 = "/root/testdata/sf0.01"
     val survivorIds = Pipeline.pipelineE2e(spark, sf01).collect()
       .map(_.getLong(0)).toSet
-    val nonKeepers = Dedup.dedupClustersStar(spark, sf01).collect()
+    val nonKeepers = Dedup.dedupClusters(spark, sf01).collect()
       .collect { case r if r.getLong(0) != r.getLong(1) => r.getLong(0) }.toSet
     val flagged = Dedup.decontaminate(spark, sf01).collect()
       .map(_.getLong(0)).toSet
